@@ -6,7 +6,10 @@ This is the only layer that collects: every function materializes an
 already-aggregated (or explicitly limited) DataFrame, so driver transfer
 is bounded regardless of table size. The reference instead fetched the
 full table per request and post-processed in Python — here each endpoint
-is one Catalyst plan ending in a small result.
+is one Catalyst plan ending in a small result, except
+``get_market_overview``, which runs two (the overview aggregate and the
+per-brand counts). Merging those into one scan measured no gain on
+the ``api_cars`` benchmark (4-core host).
 
 Response envelope follows the tested contract ``{"status": "success",
 "data": ...}`` (reference ``backend/test_app.py:91-104``; the checked-in

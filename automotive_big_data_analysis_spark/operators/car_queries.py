@@ -100,11 +100,17 @@ def brand_models(cars: DataFrame, brand_name: str) -> DataFrame:
 def model_details(cars: DataFrame, model_id: str) -> DataFrame:
     """GET /models/<id> → the first car whose model_id matches
     (backend/app.py:297-307). The reference takes Python-iteration first
-    match; distributed first-match is nondeterministic, so pick the
-    min-by-(brand,model,year,attention) row via row_number for a stable
-    result. Returns 0 rows where the reference 404s."""
+    match; distributed first-match depends on scan order, so pick the
+    row_number-first row under a total order for a stable result:
+    (brand, model, year, attention), then the remaining scalar view
+    columns, then the map and history columns in a canonical (sorted
+    entries) form. Rows equal under it return equal answers. Returns 0
+    rows where the reference 404s."""
     w = Window.partitionBy("model_id").orderBy(
-        F.col("brand"), F.col("model"), F.col("manufacture_year"), F.col("attention")
+        "brand", "model", "manufacture_year", "attention",
+        "guide_price", "horsepower", "doors", "min_price", "discount", "car_type",
+        F.array_sort(F.map_entries("city_license_plates")),
+        F.array_sort("history_prices"),
     )
     return (
         cars.where(F.col("model_id") == F.lit(model_id))
@@ -204,7 +210,7 @@ def market_overview(cars: DataFrame) -> DataFrame:
         F.coalesce(F.col("attention"), F.lit(0)).alias("attention_f"),
         F.col("brand"),
         # tie-break argmax deterministically: higher attention wins, then
-        # lexicographically smallest label (reference takes first-seen).
+        # the lexicographically largest label (reference takes first-seen).
         F.struct(
             F.col("attention").alias("a"), top_label.alias("label")
         ).alias("top_struct"),
@@ -217,10 +223,6 @@ def market_overview(cars: DataFrame) -> DataFrame:
             F.col("top_struct.label"),
             F.struct(
                 F.col("top_struct.a").alias("a"),
-                # invert label ordering so max_by prefers the smaller label
-                # on attention ties — requires an orderable surrogate; use
-                # negative of nothing: fall back to label itself (larger
-                # label wins ties). Ties are broken deterministically.
                 F.col("top_struct.label").alias("l"),
             ),
         ).alias("top_car"),

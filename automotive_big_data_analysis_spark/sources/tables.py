@@ -10,6 +10,12 @@ partition-parallel.
 Table layout is chosen for the 100 TB case: parquet, partitioned by a
 low-cardinality column when given (partition pruning for year-filtered
 queries), append or overwrite semantics explicit at the call site.
+
+Each append writes one file per partition value, and splits a value over
+several files only when its rows exceed the session's advisory partition
+size. Every read lists and opens every file of the table (the reference
+re-scans it per request), so files that one write scatters across its
+input's tasks cost each later read a task and an open apiece.
 """
 
 from __future__ import annotations
@@ -47,18 +53,30 @@ def insert_rows(
     partition_by: str | None = "manufacture_year",
 ) -> int:
     """Append row dicts (reference S5). Returns the row count written."""
-    df = car_data_from_rows(spark, rows)
-    return insert_df(df, path, partition_by=partition_by)
+    insert_df(car_data_from_rows(spark, rows), path, partition_by=partition_by)
+    return len(rows)
 
 
 def insert_df(
     df: DataFrame, path: str, partition_by: str | None = "manufacture_year"
-) -> int:
-    writer = df.write.mode("append")
-    if partition_by:
-        writer = writer.partitionBy(partition_by)
-    writer.parquet(path)
-    return df.count()
+) -> None:
+    """Append ``df`` to the dataset at ``path``; returns nothing (counting
+    the rows would re-run ``df``'s whole plan as a second job).
+
+    With ``partition_by``, the rows are first rebalanced on that column,
+    so each value's rows meet in one write task: one file per value per
+    append, split by AQE only when a value's rows exceed the advisory
+    partition size. Written straight from ``df``'s own partitions, every
+    input task would write its own file into every value's directory."""
+    if not partition_by:
+        df.write.mode("append").parquet(path)
+        return
+    (
+        df.hint("rebalance", partition_by)
+        .write.mode("append")
+        .partitionBy(partition_by)
+        .parquet(path)
+    )
 
 
 def read_car_table(spark: SparkSession, path: str) -> DataFrame:

@@ -104,3 +104,36 @@ def test_generate_random_inserts_when_given_a_table(spark, tmp_path):
     out = api.generate_random(spark, 7, table_path=path)
     assert out["message"] == "成功生成并插入 7 条随机数据"
     assert tables.read_car_table(spark, path).count() == 7
+
+
+def test_read_routes_on_an_empty_table(spark, tmp_path):
+    """All ten read routes on a freshly created, empty car table."""
+    from automotive_big_data_analysis_spark.sources import tables
+
+    path = str(tmp_path / "car_table")
+    tables.create_car_table(spark, path)
+    cars = q.car_view(tables.read_car_table(spark, path))
+
+    assert api.get_brands(cars)["data"] == []
+    assert api.get_brand_models(cars, "Brand1")["data"] == []
+    with pytest.raises(api.ApiError):
+        api.get_model_details(cars, "Brand1_Model1")
+    assert api.get_cities(cars)["data"] == []
+    for metric in ("registrations", "attention"):
+        assert api.get_city_rankings(cars, metric)["data"] == []
+    assert api.get_recommendations(cars)["data"] == []
+    assert api.get_recommendations(cars, brand="Brand1", min_price=0)["data"] == []
+    assert api.get_market_overview(cars)["data"] == {
+        "total_registrations": 0,
+        "avg_attention": 0.0,
+        "brand_count": 0,
+        "top_car": None,
+        "popular_brands": {},
+    }
+    for metric in ("registrations", "attention", "avg_price"):
+        assert api.get_market_trends(cars, metric)["data"] == []
+    assert api.get_price_distribution(cars)["data"] == [
+        {"price_range": label, "count": 0, "avg_attention": 0.0}
+        for _lo, _hi, label in q.PRICE_BUCKETS
+    ]
+    assert api.get_consumer_preferences(cars, "type")["data"] == []

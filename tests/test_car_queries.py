@@ -174,3 +174,46 @@ def test_consumer_preferences_ev_remap(spark):
 def test_popular_brands(cars):
     got = {(r.brand, r.n_cars) for r in q.popular_brands(cars).collect()}
     assert got == {("Brand1", 2), ("Brand2", 1), ("Brand3", 1)}
+
+
+@pytest.mark.parametrize(
+    "other",
+    [
+        # ties on (brand, model, year, attention), differs in a scalar column
+        {"manufacturer_suggested_price": 99000.0},
+        # ties on every scalar column, differs only in a map column
+        {"city_license_plates": {"CityA": 50, "CityZ": 1}},
+    ],
+)
+def test_model_details_stable_under_input_order(spark, other):
+    from automotive_big_data_analysis_spark.catalog import car_data_from_rows
+    from tests.conftest import MOCK_CAR_DATA
+
+    a = MOCK_CAR_DATA[0]
+    b = dict(a, **other)
+    got = [
+        q.model_details(q.car_view(car_data_from_rows(spark, rows)), "Brand1_Model1")
+        .collect()
+        for rows in ([a, b], [b, a])
+    ]
+    assert len(got[0]) == 1
+    assert got[0][0].asDict(recursive=True) == got[1][0].asDict(recursive=True)
+
+
+@pytest.mark.parametrize("order", [1, -1])
+def test_market_overview_attention_tie_and_null_brand(spark, order):
+    from automotive_big_data_analysis_spark.catalog import car_data_from_rows
+
+    rows = [
+        dict(car_brand="A", car_model="Z", popularity=9),
+        dict(car_brand="B", car_model="Y", popularity=9),
+        dict(car_brand=None, car_model="X", popularity=3),
+    ][::order]
+    cars = q.car_view(car_data_from_rows(spark, rows))
+    row = q.market_overview(cars).first()
+    # an attention tie goes to the larger label
+    assert row.top_car == "B Y (关注度: 9)"
+    # a null brand is not a distinct brand, but popular_brands keeps it
+    assert row.brand_count == 2
+    got = {r.brand: r.n_cars for r in q.popular_brands(cars).collect()}
+    assert got == {"A": 1, "B": 1, None: 1}

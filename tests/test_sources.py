@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -152,6 +153,32 @@ def test_write_path_roundtrip(spark, tmp_path):
     plan = pruned.explain(mode="formatted") or ""
     got = {r.car_brand for r in back.collect()}
     assert got == {"A", "B"}
+
+
+def test_appends_write_one_file_per_year(spark, tmp_path):
+    """Every read lists and opens every file, so an append writes one
+    file per partition value, not one per input task per value."""
+    path = str(tmp_path / "car_table")
+    tables.create_car_table(spark, path)
+    appends = [
+        synthetic.generate_car_data(spark, 300, seed=1),
+        synthetic.generate_car_data(spark, 200, seed=2),
+    ]
+    want = Counter()
+    for df in appends:
+        assert tables.insert_df(df, path) is None
+        want.update(r[0] for r in df.select("manufacture_year").distinct().collect())
+    assert len(want) > 1
+
+    got = {
+        int(d.split("=", 1)[1]): sum(
+            f.endswith(".parquet") for f in os.listdir(os.path.join(path, d))
+        )
+        for d in os.listdir(path)
+        if d.startswith("manufacture_year=")
+    }
+    assert got == dict(want)
+    assert tables.read_car_table(spark, path).count() == 300 + 200
 
 
 def test_text_format_sources_roundtrip_and_failfast(spark, tmp_path):
